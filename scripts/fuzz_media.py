@@ -35,8 +35,8 @@ import zlib
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
 from simple_tsdb_spark.pipeline.multimodal import (  # noqa: E402
     DecoderNotAvailable,

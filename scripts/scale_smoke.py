@@ -15,10 +15,11 @@ budget packing).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def high_cardinality_phase(spark, n_series: int = 100_000, pts_per_series: int = 20) -> None:

@@ -34,6 +34,7 @@ CLI side; ADD USER is warehouse-mode only (not a wire command).
 
 from __future__ import annotations
 
+import os
 import sys
 
 MAXT = 2**63 - 1
@@ -253,7 +254,7 @@ def main() -> int:
     if len(sys.argv) < 2:
         print(__doc__)
         return 2
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     if "--ref-compat" in sys.argv:
         global REF_COMPAT

@@ -13,9 +13,10 @@ from __future__ import annotations
 
 import argparse
 import ssl
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

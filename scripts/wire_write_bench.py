@@ -12,11 +12,12 @@ Run: python scripts/wire_write_bench.py [n_cmds] [points_per_cmd]
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REF_CLIENT = "/root/reference/python/simple_tsdb/simple_tsdb/client.py"
 

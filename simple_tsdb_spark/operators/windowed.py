@@ -584,7 +584,9 @@ def quantile_points(
 
     Exact by design: ``percentile``/``quantile_cont`` interpolate
     identically in both engines (verified bit-level for arbitrary
-    probs), so the result hash-matches with NO rounding.  At 100 TB the
+    probs), so the result hash-matches with NO rounding — except where
+    the two ranks around the position hold the same value: Spark returns
+    that value, and the DuckDB twin picks it explicitly to match.  At 100 TB the
     exact quantile buffers each (series, window) group's values — the
     deliberate price (use ``approx_quantiles`` to pre-screen at extreme
     per-window cardinality); one shuffle keyed (series, window).
@@ -623,8 +625,15 @@ def quantile_points_oracle(
     w = int(window_ns)
     ps = [float(p) for p in probs]
     arr = ", ".join(repr(p) for p in ps)
+    # Spark's ``percentile`` returns the value itself when the floor and
+    # ceiling ranks of the position (n-1)·p hold the same value; DuckDB's
+    # ``quantile_cont`` interpolates it anyway (0.8·x + 0.2·x can miss x
+    # by an ulp).  Elsewhere the two interpolate identically.
+    ranks = lambda rnd, p: f"CAST({rnd}((npoints - 1) * CAST({p!r} AS DOUBLE)) AS BIGINT) + 1"
     cols = ",\n       ".join(
-        f"_q[{i + 1}] AS {quantile_col_name(p)}" for i, p in enumerate(ps)
+        f"CASE WHEN _s[{ranks('floor', p)}] = _s[{ranks('ceil', p)}] "
+        f"THEN _s[{ranks('floor', p)}] ELSE _q[{i + 1}] END AS {quantile_col_name(p)}"
+        for i, p in enumerate(ps)
     )
     return f"""
 WITH m AS ({measurement_sql}),
@@ -632,7 +641,8 @@ src AS (
   SELECT series, time_ns - (time_ns % {w}) AS wstart, CAST({field} AS DOUBLE) AS v
   FROM m WHERE {field} IS NOT NULL),
 agg AS (
-  SELECT series, wstart, quantile_cont(v, [{arr}]) AS _q, COUNT(*) AS npoints
+  SELECT series, wstart, quantile_cont(v, [{arr}]) AS _q, list_sort(list(v)) AS _s,
+         COUNT(*) AS npoints
   FROM src GROUP BY series, wstart)
 SELECT series, wstart, npoints,
        {cols}

@@ -20,10 +20,25 @@ Physical layout written here: Parquet partitioned by ``series``, sorted
 within partitions by ``time_ns`` — row-group min/max stats on time_ns then
 serve as the chunk index (SURVEY.md §1.4).
 
-At 100 TB: validation is expressed as joins/aggregations against only the
-*tail* of each touched series (time_ns ≥ min incoming timestamp), which
-partition- and stat-prunes to a sliver of the table; the append itself is
-partition-local.
+Two lanes run this one protocol:
+
+* the **driver commit** (``write_points_pandas``) takes every point-scale
+  batch: a DataFrame batch of at most ``_WAL_LANE_MAX_ROWS`` rows is
+  collected once through Arrow (a limited collect enforces the cap),
+  checked in pandas (steps 1-2), verified against the rows the store
+  holds at its keys — fetched in one Spark job (see
+  ``_verify_on_driver``), and only when the ``time_last`` sidecar cannot
+  prove the batch a pure append (step 3) — and appended by the driver
+  with pyarrow into the table's own partition directories (step 4, the
+  "WAL lane").  A monotone batch costs no Spark job beyond its collect
+  (a wire batch, already on the driver, none at all).
+* the **Spark body** (``_write_points_body``) runs where only it can:
+  batches over the row cap, non-local filesystems, the hashed-series
+  layout and series names Spark escapes in partition directories.  There
+  validation is expressed as joins/aggregations against only the *tail*
+  of each touched series (time_ns ≥ min incoming timestamp), which
+  partition- and stat-prunes to a sliver of the table; the append itself
+  is partition-local.
 
 Very high series cardinality (≥10⁵): the directory-per-series layout's
 limit is partition *namespace* size — listings, dynamic-commit file moves
@@ -184,10 +199,33 @@ def write_points(
     ``series_buckets=B`` selects the hashed-series layout for very high
     series cardinality (see module docstring).
 
+    A point-scale batch (at most ``_WAL_LANE_MAX_ROWS`` rows) is collected
+    in ONE Arrow job — an empty batch ends there — and committed on the
+    driver as ``write_points_pandas`` does: at most one more job, to
+    verify an overlap with the committed tail.  Everything else runs the
+    Spark body on the batch itself.
+
     Returns counters: rows_in, dropped_below_watermark, dropped_overlap,
     appended.
     """
     validate_measurement(batch)
+    layout = _lane_layout(measurement_path, batch.schema, series_buckets)
+    if layout is not None:
+        # Point-scale by the lane's own row cap: the collect stops one row
+        # past it, so a batch of any size costs the driver at most that.
+        pdf = _collect_exact(batch.limit(_WAL_LANE_MAX_ROWS + 1))
+        if pdf is not None and len(pdf) <= _WAL_LANE_MAX_ROWS:
+            marks = RetentionWatermarks(measurement_path)
+            stats, kept = _prepass_pandas(pdf, marks)
+            if stats.n_after_wm == 0:
+                return _below_watermark(stats)
+            res = _try_wal_append_pandas(
+                spark, measurement_path, kept, batch.schema, stats, marks, layout,
+                mode=mode, time_bucket_ns=time_bucket_ns,
+            )
+            if res is not None:
+                return res
+    # over the cap, a NULL key, or a batch the lane declines
     fields = field_columns(batch)
     # Micro-batches run several validation actions (dup check, watermark
     # count, overlap checks, append count): cache the batch once so each
@@ -204,6 +242,28 @@ def write_points(
         cached.unpersist()
 
 
+def _collect_exact(batch: DataFrame):
+    """``batch`` as a pandas frame, in ONE Arrow job and bit-exact: the
+    field columns stay Arrow-backed, where ``toPandas`` would turn a
+    nullable long into float64 (rounding values above 2^53) and fold NaN
+    into NULL.  None when a key column holds NULL (the Spark body owns
+    that case)."""
+    import pandas as pd
+
+    tbl = batch.toArrow()
+    if tbl.column("series").null_count or tbl.column("time_ns").null_count:
+        return None
+    return pd.DataFrame({
+        "series": tbl.column("series").to_pandas(),
+        "time_ns": tbl.column("time_ns").to_numpy(),
+        **{
+            name: pd.arrays.ArrowExtensionArray(tbl.column(name))
+            for name in tbl.column_names
+            if name not in ("series", "time_ns")
+        },
+    })
+
+
 def write_points_pandas(
     spark: SparkSession,
     measurement_path: str,
@@ -215,28 +275,27 @@ def write_points_pandas(
     series_buckets: int | None = None,
     wal_lane: bool = True,
 ) -> dict[str, int]:
-    """``write_points`` for a driver-resident pandas batch (the wire
-    server's WRITE_POINTS path).
+    """The driver commit: ``write_points`` for a driver-resident pandas
+    batch (the wire server's WRITE_POINTS path, and every point-scale
+    DataFrame batch ``write_points`` collects).
 
-    Semantics are identical to ``write_points`` — same checks, same
-    errors, same counters — but pass 1 (intra-batch ordering + watermark
-    classification + counters) runs in pandas on the driver instead of
-    as a Spark job, so a monotone point-scale append costs at most ONE
-    Spark job (the partitioned write).
+    Semantics are identical to the Spark body — same checks, same errors,
+    same counters, same stored rows.  Pass 1 (intra-batch ordering +
+    watermark classification + counters) runs in pandas; the retransmit
+    verify, when the ``time_last`` sidecar cannot rule an overlap out,
+    costs one Spark job that fetches the stored rows at the batch's keys
+    (``_verify_on_driver``); the append is the **WAL lane**: the driver
+    writes the parquet files directly with pyarrow into the same
+    partition layout — the analog of the reference absorbing small writes
+    in its WAL before chunk-store fold-in (doc/WRITES.txt:1-16); here
+    ``compact_measurement`` is the fold-in.  Readers need no union logic:
+    the lane's files land in the table's own directories with identical
+    schema/stats, so every query sees them immediately.
 
-    When the batch is a *provably monotone* append (every touched
-    series' kept low is strictly above its committed ``time_last`` —
-    the sidecar can prove it without touching stored data) the append
-    takes the **WAL lane**: the driver writes the parquet files
-    directly with pyarrow into the same partition layout, ZERO Spark
-    jobs — the analog of the reference absorbing small writes in its
-    WAL before chunk-store fold-in (doc/WRITES.txt:1-16); here
-    ``compact_measurement`` is the fold-in.  Readers need no union
-    logic: the lane's files land in the table's own directories with
-    identical schema/stats, so every query sees them immediately.
-    ``wal_lane=False`` forces the Spark append (used by the
-    equivalence tests).  Equivalence to the DataFrame path is pinned
-    in test_ingest.
+    Where the lane cannot serve the batch (``_lane_layout``,
+    ``_try_wal_append_pandas``) it runs the Spark body on the batch;
+    ``wal_lane=False`` forces that (used by the equivalence tests).
+    Equivalence is pinned in test_ingest.
     """
     missing = [f.name for f in spark_schema.fields if f.name not in pdf.columns]
     if missing:
@@ -245,16 +304,12 @@ def write_points_pandas(
     stats, kept = _prepass_pandas(pdf, marks)
     fields = [f.name for f in spark_schema.fields if f.name not in ("series", "time_ns")]
     if stats.n_after_wm == 0:
-        return {
-            "rows_in": stats.n_in,
-            "dropped_below_watermark": stats.n_in,
-            "dropped_overlap": 0,
-            "appended": 0,
-        }
-    if wal_lane:
+        return _below_watermark(stats)
+    layout = _lane_layout(measurement_path, spark_schema, series_buckets) if wal_lane else None
+    if layout is not None:
         res = _try_wal_append_pandas(
-            measurement_path, kept, spark_schema, stats, marks,
-            time_bucket_ns=time_bucket_ns, series_buckets=series_buckets,
+            spark, measurement_path, kept, spark_schema, stats, marks, layout,
+            mode=mode, time_bucket_ns=time_bucket_ns,
         )
         if res is not None:
             return res
@@ -271,6 +326,16 @@ def write_points_pandas(
         # the partition dirs — no shuffle.
         single_task_append=len(kept) <= 2_000_000,
     )
+
+
+def _below_watermark(stats: "_PrePass") -> dict[str, int]:
+    """The counters of a batch the retention watermark drops whole."""
+    return {
+        "rows_in": stats.n_in,
+        "dropped_below_watermark": stats.n_in,
+        "dropped_overlap": 0,
+        "appended": 0,
+    }
 
 
 def _pa_type(dt):
@@ -301,62 +366,60 @@ def _pa_type(dt):
 _WAL_LANE_MAX_ROWS = 2_000_000
 
 
+def _lane_layout(measurement_path: str, spark_schema, series_buckets: int | None) -> dict | None:
+    """The measurement's layout when the WAL lane can append to it, else
+    None — the checks that need no batch data, so ``write_points`` runs
+    them before it collects and hands the layout down to the lane."""
+    from simple_tsdb_spark.fs import LocalFS, get_fs
+
+    if not isinstance(get_fs(measurement_path), LocalFS):
+        return None  # object stores commit through the Spark committer
+    layout = _layout(measurement_path)
+    if layout.get("series_buckets") or (series_buckets and "series_buckets" not in layout):
+        return None  # hashed layout: the lane does not reimplement xxhash64 bucketing
+    if any(_pa_type(f.dataType) is None for f in spark_schema.fields if f.name != "series"):
+        return None  # no Arrow twin of Spark's parquet type for some field
+    return layout
+
+
 def _try_wal_append_pandas(
+    spark: SparkSession,
     measurement_path: str,
     kept,
     spark_schema,
     stats: "_PrePass",
     marks: RetentionWatermarks,
+    layout: dict,
     *,
+    mode: str,
     time_bucket_ns: int | None,
-    series_buckets: int | None,
 ) -> dict[str, int] | None:
-    """Zero-Spark-job append of a provably-monotone driver-resident
-    batch: pyarrow writes time-sorted snappy parquet straight into the
+    """Steps 3-4 of the driver commit for a watermark-filtered batch:
+    retransmit-verify on the driver when the batch may overlap committed
+    data (``_verify_on_driver``, one Spark job), then pyarrow writes the
+    remainder as time-sorted snappy parquet straight into the
     measurement's partition directories (tmp file + atomic rename per
     partition).  This is the reference's WAL absorbing small writes
-    before chunk-store fold-in (doc/WRITES.txt:1-16, wal.cc:87-110's
-    in-memory time_last short-circuit); ``compact_measurement`` is the
-    fold-in.  Returns None when ineligible — the caller then runs the
-    Spark commit body:
+    before chunk-store fold-in (doc/WRITES.txt:1-16, wal.cc:87-110);
+    ``compact_measurement`` is the fold-in.  Returns None when the lane
+    cannot serve the batch — the caller then runs the Spark body.
+    ``layout`` is ``_lane_layout``'s (a local filesystem, the plain series
+    layout, every field type mapped); the lane itself declines:
 
-    * local filesystem only (object stores go through the Spark
-      committer);
-    * plain ``series=`` layout with escape-free series names (the lane
-      does not reimplement Spark's %XX partition-value escaping or
-      xxhash64 bucketing);
-    * every field type Arrow-mappable;
-    * batch low strictly above every touched series' committed
-      ``time_last`` — no overlap, no retransmit-verify, crash between
-      sidecar advance and file publish errs high (safe direction, same
-      order as the Spark lane).
+    * beyond ``_WAL_LANE_MAX_ROWS`` rows;
+    * a series name Spark would %XX-escape in its partition directory;
+    * a negative timestamp.
+
+    The sidecar advances before the files publish, so a crash between
+    the two errs high (safe direction, same order as the Spark body).
     """
-    from simple_tsdb_spark.fs import LocalFS, get_fs
-
     if len(kept) > _WAL_LANE_MAX_ROWS:
-        return None
-    layout = _layout(measurement_path)
-    if layout.get("series_buckets"):
-        return None
-    if series_buckets and "series_buckets" not in layout:
-        return None  # caller selects the hashed layout on first write
+        return None  # beyond point scale: the Spark body's distributed append
     if not all(isinstance(s, str) and _PLAIN_SERIES_RE.match(s) for s in stats.per_series):
-        return None
+        return None  # the lane does not reimplement Spark's %XX partition-value escaping
     if any(lo < 0 for _s, (lo, _hi) in stats.per_series.items()):
         # negative time_ns: numpy floor-div and Spark's truncating %
-        # would bucket differently — the Spark lane owns that case
-        return None
-    if not isinstance(get_fs(measurement_path), LocalFS):
-        return None
-    pa_fields = [
-        (f.name, _pa_type(f.dataType))
-        for f in spark_schema.fields
-        if f.name != "series"
-    ]
-    if any(t is None for _n, t in pa_fields):
-        return None
-    probe = _StoreProbe(measurement_path, layout)
-    if probe.need_verify(stats):
+        # would bucket differently — the Spark body owns that case
         return None
 
     import os
@@ -365,14 +428,35 @@ def _try_wal_append_pandas(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    probe = _StoreProbe(measurement_path, layout)
+    dropped_overlap, stored_tls = 0, {}
+    firsts = {s: lo for s, (lo, _hi) in stats.per_series.items()}
+    verify = [s for s in probe.verify_series(stats) if s in probe.plain_dirs]
+    if verify:
+        kept, dropped_overlap, stored_tls, firsts = _verify_on_driver(
+            spark, probe.root, kept, spark_schema, stats, verify, mode
+        )
     if "time_bucket_ns" not in layout or "series_buckets" not in layout:
         layout.setdefault("time_bucket_ns", int(time_bucket_ns) if time_bucket_ns else None)
         layout.setdefault("series_buckets", None)
         _save_layout(measurement_path, layout)
+    counters = {
+        "rows_in": stats.n_in,
+        "dropped_below_watermark": stats.n_in - stats.n_after_wm,
+        "dropped_overlap": dropped_overlap,
+        "appended": len(kept),
+    }
+    if not len(kept):
+        return counters
     bucket_ns = layout.get("time_bucket_ns")
-    # Sidecar advances BEFORE the files publish (see _write_points_body).
-    probe.tl.advance_many({s: hi for s, (_lo, hi) in stats.per_series.items()})
-    root = probe.root
+    # Sidecar advances BEFORE the files publish, to the max of the batch's
+    # kept high and the verify's committed tail (see _write_points_body).
+    probe.tl.advance_many(
+        {s: max(hi, stored_tls.get(s, hi)) for s, (_lo, hi) in stats.per_series.items()}
+    )
+    pa_fields = [
+        (f.name, _pa_type(f.dataType)) for f in spark_schema.fields if f.name != "series"
+    ]
     schema = pa.schema(pa_fields)
     for series, g in kept.groupby("series", sort=False):
         g = g.sort_values("time_ns", kind="mergesort")
@@ -386,30 +470,134 @@ def _try_wal_append_pandas(
             parts = [(f"series={series}", g)]
         for rel, gp in parts:
             tbl = pa.Table.from_arrays(
-                [
-                    pa.Array.from_pandas(gp[name], type=typ)
-                    for name, typ in pa_fields
-                ],
-                schema=schema,
+                [_arrow(gp[name], typ) for name, typ in pa_fields], schema=schema
             )
-            d = f"{root}/{rel}"
+            d = f"{probe.root}/{rel}"
             os.makedirs(d, exist_ok=True)
             fname = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
             tmp = f"{d}/.{fname}.tmp"
             pq.write_table(tbl, tmp, compression="snappy")
             os.replace(tmp, f"{d}/{fname}")
-    new_firsts = {
-        s: int(lo) for s, (lo, _hi) in stats.per_series.items()
-        if s not in marks._marks
-    }
+    new_firsts = {s: int(t) for s, t in firsts.items() if s not in marks._marks}
     if new_firsts:
         marks.advance_many(new_firsts)
-    return {
-        "rows_in": stats.n_in,
-        "dropped_below_watermark": stats.n_in - stats.n_after_wm,
-        "dropped_overlap": 0,
-        "appended": stats.n_after_wm,
-    }
+    return counters
+
+
+def _arrow(col, typ):
+    """A pandas column as one Arrow array of ``typ``: NaN in a numpy float
+    column reads as NULL (the wire's encoding), an Arrow-backed column
+    passes through as is."""
+    import pyarrow as pa
+
+    arr = pa.array(col, type=typ, from_pandas=True)
+    return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+
+
+def _same(a, b):
+    """Spark's null-safe equality ``<=>`` per row: NULL matches NULL, and
+    NaN matches NaN (as in Spark's comparison of floating values)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    eq = pc.fill_null(pc.equal(a, b), False)
+    if pa.types.is_floating(a.type):
+        eq = pc.or_(eq, pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+    return pc.or_(eq, pc.and_(pc.is_null(a), pc.is_null(b))).to_numpy(zero_copy_only=False)
+
+
+def _verify_on_driver(
+    spark: SparkSession, root: str, kept, spark_schema, stats: "_PrePass",
+    verify: list[str], mode: str,
+):
+    """The Spark body's pass 2 for a driver-resident batch: the same
+    retransmit-verify, committed-``time_last`` ordering check, overlap
+    split and tail fold-in, with the same errors and counters.
+
+    One Spark job fetches what the checks need, from the partition
+    directories of the ``verify`` series only (every other touched
+    series is provably past its committed tail): their stored rows from
+    the batch low to its high (a superset of the rows at its keys) plus
+    each series' last row, every row carrying its series' committed tail
+    max ``_tl``.  The tail is read in one task — ``coalesce(1)``
+    satisfies the window's clustering, so no exchange and no second job
+    — which is the point-scale trade: a batch that reaches far back into
+    a long series reads that series' tail in one task.  Past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    verified series, Spark lists their directories in one more job.
+
+    Returns (remainder to append, dropped_overlap, stored_tls, firsts)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import Window
+
+    fields = [
+        (f.name, _pa_type(f.dataType))
+        for f in spark_schema.fields
+        if f.name not in ("series", "time_ns")
+    ]
+    lo = min(stats.per_series[s][0] for s in verify)
+    hi = max(stats.per_series[s][1] for s in verify)
+    stored = (
+        # the batch's schema is the measurement's: no schema-inference
+        # job, and only the verified series' directories are listed
+        spark.read.schema(spark_schema).option("basePath", root)
+        .parquet(*[f"{root}/series={s}" for s in verify])
+        .where(F.col("time_ns") >= lo)
+    )
+    st = (
+        stored.select("series", "time_ns", *[n for n, _t in fields])
+        .coalesce(1)
+        .withColumn("_tl", F.max("time_ns").over(Window.partitionBy("series")))
+        .where((F.col("time_ns") <= hi) | (F.col("time_ns") == F.col("_tl")))
+        .toArrow()
+    )
+    st_keys = pd.DataFrame({
+        "series": st.column("series").to_pandas(),
+        "time_ns": st.column("time_ns").to_numpy(),
+        "_srow": np.arange(st.num_rows),
+    })
+    # a series absent here has no committed point at or after lo
+    stored_tls = dict(zip(st_keys["series"], st.column("_tl").to_numpy().tolist()))
+    srow = kept[["series", "time_ns"]].merge(st_keys, on=["series", "time_ns"], how="left")
+    srow = srow["_srow"].to_numpy()
+    ov = ~np.isnan(srow)
+    if mode == "strict" and fields and ov.any():
+        bi = np.flatnonzero(ov)
+        si = srow[ov].astype(np.int64)
+        bad = np.zeros(len(bi), dtype=bool)
+        for name, typ in fields:
+            stored_v = st.column(name).take(si).combine_chunks().cast(typ)
+            bad |= ~_same(_arrow(kept[name], typ).take(bi), stored_v)
+        if bad.any():
+            s, t = _first_per_series(kept.iloc[bi[bad]])
+            raise OverwriteMismatch(
+                f"retransmit differs from stored point at series={s} time_ns={t}"
+            )
+    if mode == "strict":
+        # Reference additionally rejects *new* timestamps at or below
+        # time_last (out-of-order vs the committed store) unless they are
+        # exact retransmits; enforce per touched series.
+        none = np.iinfo(np.int64).min
+        tl = np.fromiter(
+            (stored_tls.get(s, none) for s in kept["series"]), dtype=np.int64, count=len(kept)
+        )
+        stale = ~ov & (tl != none) & (kept["time_ns"].to_numpy() <= tl)
+        if stale.any():
+            s, t = _first_per_series(kept[stale])
+            raise OutOfOrderTimestamps(
+                f"new point not after committed time_last: series={s} time_ns={t}"
+            )
+    rest = kept[~ov]
+    firsts = rest.groupby("series", sort=False)["time_ns"].min().to_dict()
+    return rest, int(ov.sum()), stored_tls, firsts
+
+
+def _first_per_series(rows) -> tuple[str, int]:
+    """The (series, earliest time_ns) an error reports, of the first
+    series in name order."""
+    s = min(rows["series"])
+    return s, int(rows.loc[rows["series"] == s, "time_ns"].min())
 
 
 class _StoreProbe:
@@ -453,11 +641,16 @@ class _StoreProbe:
             return -1  # provably no committed data for this series
         return None
 
-    def need_verify(self, stats: "_PrePass") -> bool:
-        return self.exists and stats.lo is not None and any(
-            self.known_tl(s) is None or s_lo <= self.known_tl(s)
-            for s, (s_lo, _s_hi) in stats.per_series.items()
-        )
+    def verify_series(self, stats: "_PrePass") -> list[str]:
+        """The touched series whose kept low is not provably above their
+        committed ``time_last`` — the only ones a retransmit-verify must
+        read; a batch with none is a pure append."""
+        if not self.exists:
+            return []
+        return [
+            s for s, (s_lo, _s_hi) in stats.per_series.items()
+            if (tl := self.known_tl(s)) is None or s_lo <= tl
+        ]
 
 
 # Tripwire for pathological batch width: write validation materializes
@@ -619,7 +812,7 @@ def _write_points_body(
     stored_tls: dict[str, int] = {}
     probe = _StoreProbe(measurement_path, layout)
     root, tl = probe.root, probe.tl
-    if probe.need_verify(stats):
+    if probe.verify_series(stats):
         stored = spark.read.parquet(root).where(F.col("time_ns") >= lo)
         if touched and len(touched) <= 256:
             stored = stored.where(F.col("series").isin(touched))

@@ -7,8 +7,10 @@ protocol (``doc/TSDBSERVER_PROTOCOL.txt:13-38``).
 
 Spark mapping (SURVEY.md §2.8): a streaming source (files/kafka/rate) →
 ``foreachBatch`` running the same validation as batch ``write_points`` →
-Parquet append.  The checkpoint directory *is* the WAL: a crashed batch
-replays, and ``mode='dedup'`` makes the replay idempotent on
+Parquet append.  A point-scale micro-batch commits on the driver: one
+Arrow collect, at most one job to verify a replayed tail, and a pyarrow
+append (``sources/writer.py``).  The checkpoint directory *is* the WAL:
+a crashed batch replays, and ``mode='dedup'`` makes the replay idempotent on
 (series, time_ns) — effective exactly-once, the streaming equivalent of
 the reference's byte-verified retransmit (wal.cc:87-246).
 
@@ -46,8 +48,8 @@ def start_ingest(
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no separate emptiness probe: an empty point-scale batch ends at
+        # the commit's own collect
         write_points(batch_df.sparkSession, measurement_path, batch_df, mode=mode)
 
     writer = stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir)
@@ -75,10 +77,9 @@ def start_ingest_with_rollup(
     raw tail."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-        write_points(spark, measurement_path, batch_df, mode=mode)
+        if write_points(spark, measurement_path, batch_df, mode=mode)["rows_in"] == 0:
+            return
         from simple_tsdb_spark.operators.rollup import advance_rollup
         from simple_tsdb_spark.sources.writer import data_root
 

@@ -9,13 +9,14 @@ F1): arithmetic timestamps ``100 + 10*i``, three fields
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from simple_tsdb_spark import get_spark  # noqa: E402
 

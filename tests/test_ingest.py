@@ -4,6 +4,8 @@ streaming wrapper's end-to-end append."""
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 import pytest
 from pyspark.sql import types as T
@@ -342,8 +344,12 @@ class TestPandasWriteLane:
     """write_points_pandas must be semantics-identical to write_points:
     same errors, same counters, same stored bytes."""
 
-    def test_counters_and_data_match_dataframe_path(self, spark, tmp_path):
+    def test_counters_and_data_match_dataframe_path(self, spark, tmp_path, monkeypatch):
+        from simple_tsdb_spark.sources import writer as W
         from simple_tsdb_spark.sources.writer import write_points_pandas
+
+        # DataFrame batches take the Spark body, whatever their size
+        monkeypatch.setattr(W, "_collect_exact", lambda batch: None)
 
         rows1 = [("a", 10, 1.0), ("a", 20, None), ("b", 5, 9.0)]
         rows2 = [("a", 20, None), ("a", 30, 3.0), ("b", 7, 8.0)]  # partial retransmit
@@ -575,10 +581,10 @@ class TestWalLane:
         )
         assert (
             W._try_wal_append_pandas(
-                path, pdf, SCHEMA,
+                spark, path, pdf, SCHEMA,
                 W._PrePass(1, 1, {"sp ace/slash": (10, 10)}),
-                W.RetentionWatermarks(path),
-                time_bucket_ns=None, series_buckets=None,
+                W.RetentionWatermarks(path), {},
+                mode="strict", time_bucket_ns=None,
             )
             is None
         )
@@ -671,9 +677,184 @@ def test_wide_batch_guard_warns(spark, tmp_path, monkeypatch):
         for w in rec
     )
     # Spark prepass path too
+    monkeypatch.setattr(W, "_collect_exact", lambda batch: None)
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
         pdf2 = pdf.assign(time_ns=[20] * 5)
         r = W.write_points(spark, str(tmp_path / "m2"), spark.createDataFrame(pdf2, SCHEMA))
     assert r["appended"] == 5
     assert any(issubclass(w.category, ResourceWarning) for w in rec)
+
+
+# -- driver commit: point-scale DataFrame and stream batches ---------------
+
+POINTS = T.StructType(
+    [
+        T.StructField("series", T.StringType()),
+        T.StructField("time_ns", T.LongType()),
+        T.StructField("v", T.DoubleType()),
+        T.StructField("n", T.LongType()),
+    ]
+)
+
+
+def _points_file(path, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    series, t, v, n = zip(*rows)
+    pq.write_table(
+        pa.table(
+            {
+                "series": pa.array(series),
+                "time_ns": pa.array(t, pa.int64()),
+                "v": pa.array(v, pa.float64()),
+                "n": pa.array(n, pa.int64()),
+            }
+        ),
+        path,
+    )
+
+
+def _stored(spark, path):
+    from simple_tsdb_spark.sources.writer import data_root
+
+    return sorted(
+        (r["series"], r["time_ns"], r["v"], r["n"])
+        for r in spark.read.parquet(data_root(path)).collect()
+    )
+
+
+class TestDriverCommit:
+    """``write_points`` commits a point-scale DataFrame batch on the
+    driver (one Arrow collect, at most one verify job, a pyarrow append)
+    with the Spark body's semantics."""
+
+    FILE1 = [("a", 10 * i, float(i), i) for i in range(1, 40)] + [
+        ("b", 10 * i + 3, None, None) for i in range(1, 40)
+    ]
+    # replays the last 20 rows of FILE1 (series b's tail), then new points
+    FILE2 = FILE1[-20:] + [("a", 1000 + i, 0.5, None) for i in range(10)] + [
+        ("b", 1000 + i, 1.5, 7) for i in range(10)
+    ]
+
+    def _stream(self, spark, tmp_path, name, files, monkeypatch, mode="dedup"):
+        """Feed ``files`` one trigger each through start_ingest; returns
+        (measurement path, the commit counters of each batch, the Spark
+        job ids each batch ran)."""
+        from simple_tsdb_spark.sources.writer import write_points as write
+        from simple_tsdb_spark.streaming import ingest, start_ingest
+
+        src = tmp_path / f"{name}-in"
+        src.mkdir()
+        path = str(tmp_path / name)
+        counters = []
+
+        def recording(*a, **k):
+            counters.append(write(*a, **k))
+            return counters[-1]
+
+        monkeypatch.setattr(ingest, "write_points", recording)
+        q = start_ingest(
+            spark.readStream.schema(POINTS).option("maxFilesPerTrigger", 1).parquet(str(src)),
+            path, checkpoint_dir=str(tmp_path / f"{name}-ckpt"), mode=mode,
+        )
+        tracker, jobs = spark.sparkContext.statusTracker(), []
+        try:
+            for i, rows in enumerate(files):
+                before = set(tracker.getJobIdsForGroup(str(q.runId)))
+                _points_file(str(src / f"f{i}.parquet"), rows)
+                q.processAllAvailable()
+                jobs.append(set(tracker.getJobIdsForGroup(str(q.runId))) - before)
+        finally:
+            q.stop()
+        return path, counters, jobs
+
+    def test_stream_replay_matches_spark_body(self, spark, tmp_path, monkeypatch):
+        from simple_tsdb_spark.sources import writer as W
+
+        p_drv, c_drv, jobs = self._stream(
+            spark, tmp_path, "drv", [self.FILE1, self.FILE2], monkeypatch
+        )
+        # the overlapping micro-batch: one collect plus one verify job
+        assert 1 <= len(jobs[1]) <= 3, sorted(jobs[1])
+        monkeypatch.setattr(W, "_collect_exact", lambda batch: None)
+        p_spk, c_spk, jobs_spk = self._stream(
+            spark, tmp_path, "spk", [self.FILE1, self.FILE2], monkeypatch
+        )
+        assert len(jobs_spk[1]) > 3  # the bracket tells the two commits apart
+        assert c_drv == c_spk
+        assert c_drv[1] == {
+            "rows_in": 40, "dropped_below_watermark": 0, "dropped_overlap": 20, "appended": 20,
+        }
+        assert _stored(spark, p_drv) == _stored(spark, p_spk)
+        assert len(_stored(spark, p_drv)) == 98
+
+    def test_nullable_long_above_2_53_is_exact(self, spark, tmp_path, monkeypatch):
+        big = 2**60 + 1  # float64 would round it to 2^60
+        rows1 = [("a", 10, float("nan"), big), ("a", 20, None, None), ("a", 30, 1.0, 2**53 + 1)]
+        rows2 = rows1[1:] + [("a", 40, 2.0, -big)]  # strict: the replay must verify equal
+        path, counters, _ = self._stream(
+            spark, tmp_path, "big", [rows1, rows2], monkeypatch, mode="strict"
+        )
+        assert counters[1]["dropped_overlap"] == 2 and counters[1]["appended"] == 1
+        got = _stored(spark, path)
+        assert [r[3] for r in got] == [big, None, 2**53 + 1, -big]
+        assert math.isnan(got[0][2]) and got[1][2] is None
+
+    def test_strict_errors_raised_by_driver_commit(self, spark, tmp_path, monkeypatch):
+        from simple_tsdb_spark.sources import writer as W
+
+        def no_spark_body(*a, **k):
+            raise AssertionError("point-scale batch reached the Spark body")
+
+        monkeypatch.setattr(W, "_write_points_body", no_spark_body)
+        path = str(tmp_path / "m")
+
+        def batch(rows):
+            f = str(tmp_path / f"b{len(list(tmp_path.iterdir()))}.parquet")
+            _points_file(f, rows)
+            return spark.read.parquet(f)
+
+        W.write_points(spark, path, batch([("a", 10, 1.0, 1), ("a", 20, 2.0, 2)]))
+        with pytest.raises(OverwriteMismatch, match="series=a time_ns=20"):
+            W.write_points(spark, path, batch([("a", 20, 2.0, 3)]))
+        with pytest.raises(OutOfOrderTimestamps, match="series=a time_ns=15"):
+            W.write_points(spark, path, batch([("a", 15, 1.5, 1), ("a", 20, 2.0, 2)]))
+        r = W.write_points(spark, path, batch([("a", 20, 2.0, 2), ("a", 30, 3.0, None)]))
+        assert r["dropped_overlap"] == 1 and r["appended"] == 1
+        assert _stored(spark, path) == [("a", 10, 1.0, 1), ("a", 20, 2.0, 2), ("a", 30, 3.0, None)]
+
+    def test_batch_over_row_cap_runs_spark_body_on_itself(self, spark, tmp_path, monkeypatch):
+        """A batch whose plan estimate is tiny but whose rows pass the
+        lane's cap: the collect stops one row past the cap, and the Spark
+        body runs on the batch itself (its own pre-pass), not on a frame
+        rebuilt from the collected rows."""
+        from pyspark.sql import functions as F
+        from simple_tsdb_spark.sources import writer as W
+
+        monkeypatch.setattr(W, "_WAL_LANE_MAX_ROWS", 100)
+        collected, prepass = [], []
+        collect, pre = W._collect_exact, W._prepass_spark
+
+        def spy_collect(batch):
+            pdf = collect(batch)
+            collected.append(len(pdf))
+            return pdf
+
+        def spy_prepass(*a, **k):
+            prepass.append(1)
+            return pre(*a, **k)
+
+        monkeypatch.setattr(W, "_collect_exact", spy_collect)
+        monkeypatch.setattr(W, "_prepass_spark", spy_prepass)
+        batch = spark.range(1).select(
+            F.lit("a").alias("series"),
+            F.explode(F.sequence(F.lit(1), F.lit(500))).alias("time_ns"),
+        ).select("series", F.col("time_ns").cast("long"), (F.col("time_ns") * 0.5).alias("v"))
+        path = str(tmp_path / "m")
+        r = W.write_points(spark, path, batch)
+        assert collected == [101] and prepass == [1]
+        assert r == {"rows_in": 500, "dropped_below_watermark": 0, "dropped_overlap": 0, "appended": 500}
+        got = spark.read.parquet(path).orderBy("time_ns").collect()
+        assert [(g["time_ns"], g["v"]) for g in got] == [(t, t * 0.5) for t in range(1, 501)]

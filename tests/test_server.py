@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from simple_tsdb_spark import server as srv
 from simple_tsdb_spark.client import TsdbClient
 from simple_tsdb_spark.server import TsdbServer
+from simple_tsdb_spark.wire_client import WireClient
 
 REF_CLIENT = "/root/reference/python/simple_tsdb/simple_tsdb/client.py"
 
@@ -717,20 +718,30 @@ def test_sums_stream_many_chunks(spark, tmp_path):
     )
     c.write_points("db", "m", spark.createDataFrame(pdf, schema_t))
 
-    ref = _load_ref_client()
-    with TsdbServer(spark, wh, port=0) as s:
-        conn = ref.Connection(host="127.0.0.1", port=s.address[1])
-        try:
-            op = conn.sum_points("db", "m", "s1", ["v"], 0, 2**64 - 1, 100)
-            sizes, ts, sums = [], [], []
-            while (chunk := op.read_chunk()) is not None:
-                sizes.append(len(chunk.timestamps))
-                ts.extend(int(x) for x in chunk.timestamps)
-                sums.extend(float(x) for x in chunk.sums[0])
-        finally:
-            conn.close()
+    with TsdbServer(spark, wh, port=0) as s, WireClient("127.0.0.1", s.address[1]) as conn:
+        # every DT_SUMS_CHUNK token is followed by its u16 window count,
+        # then one body read: ts u64[n], then the field's sums f64[n] —
+        # read the sums as the wire carries them (the client reports an
+        # empty window's sum as None)
+        sizes, sums, recv, last, body = [], [], conn._recvall, [None], [0]
+
+        def counting_recv(n):
+            b = recv(n)
+            if body[0]:
+                k, body[0] = body[0], 0
+                sums.extend(struct.unpack_from("<%dd" % k, b, 8 * k))
+            elif n == 2 and last[0] == struct.pack("<I", srv.DT_SUMS_CHUNK):
+                sizes.append(struct.unpack("<H", b)[0])
+                body[0] = sizes[-1]
+            last[0] = b
+            return b
+
+        conn._recvall = counting_recv
+        got = conn.sum_points("db", "m", "s1", 100, ["v"], 0, 2**64 - 1)
+    ts = [int(x) for x in got["wstart"]]
     assert sizes == [srv.SUMS_CHUNK_WINDOWS, n_windows - srv.SUMS_CHUNK_WINDOWS]
     assert ts == [100 * i for i in range(n_windows)]
+    assert len(sums) == n_windows
     assert sums[0] == 2.5 and sums[-1] == 7.5 and sum(sums) == 10.0
 
 
@@ -870,27 +881,17 @@ def test_select_unbounded_paginates(spark, tmp_path, monkeypatch):
     )
     c.write_points("db", "m", spark.createDataFrame(pdf, c.catalog.spark_schema("db", "m")))
 
-    ref = _load_ref_client()
-    with TsdbServer(spark, wh, port=0) as s:
-        conn = ref.Connection(host="127.0.0.1", port=s.address[1])
-        try:
-            schema = conn.get_schema("db", "m")
-            op = conn.select_points("db", "m", "s1", schema, ["v"], 0, 2**64 - 1, 2**64 - 1)
-            ts, vs = [], []
-            while (chunk := op.read_chunk()) is not None:
-                ts.extend(int(t) for t in chunk.timestamps)
-                vs.extend(chunk.fields["v"].to_idb_type(i) for i in range(chunk.npoints))
-            assert ts == [10 * i for i in range(n)]
-            assert vs == [float(i) for i in range(n)]
+    with TsdbServer(spark, wh, port=0) as s, WireClient("127.0.0.1", s.address[1]) as conn:
+        got = conn.select_points_limit("db", "m", "s1", ["v"], 0, 2**64 - 1, 2**64 - 1)
+        ts = [int(t) for t in got["time_ns"]]
+        vs = [float(v) for v in got["v"]]
+        assert ts == [10 * i for i in range(n)]
+        assert vs == [float(i) for i in range(n)]
 
-            # bounded limit that crosses a segment boundary
-            op = conn.select_points("db", "m", "s1", schema, ["v"], 0, 2**64 - 1, 250)
-            ts = []
-            while (chunk := op.read_chunk()) is not None:
-                ts.extend(int(t) for t in chunk.timestamps)
-            assert ts == [10 * i for i in range(250)]
-        finally:
-            conn.close()
+        # bounded limit that crosses a segment boundary
+        got = conn.select_points_limit("db", "m", "s1", ["v"], 0, 2**64 - 1, 250)
+        ts = [int(t) for t in got["time_ns"]]
+        assert ts == [10 * i for i in range(250)]
 
 
 def test_select_after_compaction_over_wire(spark, tmp_path):
@@ -913,29 +914,17 @@ def test_select_after_compaction_over_wire(spark, tmp_path):
         )
         c.write_points("db", "m", spark.createDataFrame(pdf, schema_t))
 
-    ref = _load_ref_client()
-    with TsdbServer(spark, wh, port=0) as s:
-        conn = ref.Connection(host="127.0.0.1", port=s.address[1])
-        try:
-            schema = conn.get_schema("db", "m")
+    with TsdbServer(spark, wh, port=0) as s, WireClient("127.0.0.1", s.address[1]) as conn:
 
-            def read_all():
-                op = conn.select_points("db", "m", "s1", schema, ["v"], 0, 2**64 - 1, 2**64 - 1)
-                out = []
-                while (chunk := op.read_chunk()) is not None:
-                    out.extend(
-                        (int(t), chunk.fields["v"].to_idb_type(i))
-                        for i, t in enumerate(chunk.timestamps)
-                    )
-                return out
+        def read_all():
+            got = conn.select_points_limit("db", "m", "s1", ["v"], 0, 2**64 - 1, 2**64 - 1)
+            return [(int(t), float(v)) for t, v in zip(got["time_ns"], got["v"])]
 
-            before = read_all()
-            compact_measurement(spark, c.catalog.measurement_path("db", "m"))
-            after = read_all()
-            assert after == before and len(after) == 150
-            # and the post-compaction store still accepts validated writes
-            pdf = pd.DataFrame({"series": ["s1"], "time_ns": [10**9], "v": [9.0]})
-            c.write_points("db", "m", spark.createDataFrame(pdf, schema_t))
-            assert len(read_all()) == 151
-        finally:
-            conn.close()
+        before = read_all()
+        compact_measurement(spark, c.catalog.measurement_path("db", "m"))
+        after = read_all()
+        assert after == before and len(after) == 150
+        # and the post-compaction store still accepts validated writes
+        pdf = pd.DataFrame({"series": ["s1"], "time_ns": [10**9], "v": [9.0]})
+        c.write_points("db", "m", spark.createDataFrame(pdf, schema_t))
+        assert len(read_all()) == 151

@@ -243,6 +243,30 @@ def test_quantile_points_model(spark):
     assert quantile_col_name(0.999) == "p99_9" and quantile_col_name(0.25) == "p25"
 
 
+def test_quantile_points_tied_ranks_match_oracle(spark):
+    """p90 of 339 values sits at position 304.2, between two ranks that
+    both hold 115.01: Spark's percentile returns 115.01 exactly, and the
+    DuckDB twin must too (quantile_cont alone interpolates it to
+    115.01000000000002)."""
+    import duckdb
+
+    from simple_tsdb_spark.operators import quantile_points
+    from simple_tsdb_spark.operators.windowed import quantile_points_oracle
+
+    vals = [i * 0.1 for i in range(304)] + [115.01, 115.01] + [200.0 + i for i in range(33)]
+    pdf = pd.DataFrame({"series": "a", "time_ns": np.arange(len(vals), dtype=np.int64), "value": vals})
+    got = quantile_points(
+        spark.createDataFrame(pdf), field="value", window_ns=10_000, probs=(0.5, 0.9)
+    ).toPandas()
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    want = con.execute(
+        quantile_points_oracle("SELECT * FROM pts", field="value", window_ns=10_000, probs=(0.5, 0.9))
+    ).df()
+    assert got.p90.tolist() == want.p90.tolist() == [115.01]
+    assert got.p50.tolist() == want.p50.tolist()
+
+
 def test_hopping_mean_model(spark, f2, f2_pdf):
     """Hopping windows vs a pandas model: every in-range point lands in
     exactly window/slide windows; per-window count/min/max/mean match."""
